@@ -23,6 +23,8 @@ import sys
 
 
 def _cmd_convert(args) -> int:
+    from pyspark import StorageLevel
+
     from .operators.extract import extract_spans, extracted_flat
     from .session import get_spark
     from .sources import read_pdf_docs, read_text_docs, write_docs_json
@@ -37,11 +39,18 @@ def _cmd_convert(args) -> int:
         merge_strategy=args.merge_strategy,
         mega_span_threshold=args.mega_span_threshold,
     )
-    flat = extracted_flat(extracted)
-    flat.write.mode("overwrite").parquet(args.output)
-    n = spark.read.parquet(args.output).count()
+    # both sinks read one extraction: without the cache the JSON sink
+    # would re-read every file and re-run the kernel
     if args.json_dir:
-        write_docs_json(extracted, args.json_dir)
+        extracted.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        extracted_flat(extracted).write.mode("overwrite").parquet(args.output)
+        if args.json_dir:
+            write_docs_json(extracted, args.json_dir)
+    finally:
+        if args.json_dir:
+            extracted.unpersist()
+    n = spark.read.parquet(args.output).count()
     print(f"convert: {n} elements -> {args.output}")
     return 0
 
@@ -467,13 +476,15 @@ def build_parser() -> argparse.ArgumentParser:
     la.add_argument("--key", default=None, help="custom key (optional)")
     la.add_argument("--date", default=None,
                     help="created_date override (YYYY-MM-DD)")
-    la.add_argument("--pretty", action="store_true", default=True)
+    la.add_argument("--pretty", action=argparse.BooleanOptionalAction,
+                    default=True)
     la.set_defaults(fn=_cmd_lessons)
 
     lg = lsub.add_parser("get", help="retrieve a lesson by key")
     lg.add_argument("key")
     lg.add_argument("--store", required=True)
-    lg.add_argument("--pretty", action="store_true", default=True)
+    lg.add_argument("--pretty", action=argparse.BooleanOptionalAction,
+                    default=True)
     lg.set_defaults(fn=_cmd_lessons)
 
     ll = lsub.add_parser("list", help="list lessons with filters")
@@ -481,7 +492,8 @@ def build_parser() -> argparse.ArgumentParser:
     ll.add_argument("--tags", default=None, help="comma-separated filter")
     ll.add_argument("--project", default=None)
     ll.add_argument("--limit", type=int, default=20)
-    ll.add_argument("--pretty", action="store_true", default=True)
+    ll.add_argument("--pretty", action=argparse.BooleanOptionalAction,
+                    default=True)
     ll.set_defaults(fn=_cmd_lessons)
 
     lu = lsub.add_parser("update", help="update a lesson")
@@ -495,7 +507,8 @@ def build_parser() -> argparse.ArgumentParser:
     lu.add_argument("--item-description", default=None)
     lu.add_argument("--item-details", default=None)
     lu.add_argument("--item-benefit", default=None)
-    lu.add_argument("--pretty", action="store_true", default=True)
+    lu.add_argument("--pretty", action=argparse.BooleanOptionalAction,
+                    default=True)
     lu.set_defaults(fn=_cmd_lessons)
 
     ld = lsub.add_parser("delete", help="delete a lesson")

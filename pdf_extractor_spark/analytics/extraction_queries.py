@@ -135,13 +135,15 @@ def fused_extracted_flat(
     # over-threshold docs into the explode skew path — zero rows when
     # none exceed (plan present, data absent), and the inline skip
     # above partitions docs exactly (same len(spans) predicate)
-    from ..operators.extract import _extract_mega_flat
+    from ..operators.extract import _extract_mega, _flat_view
 
     mega_ids = ids.where(F.col("doc_id") % 50 == 49)
     mega_corpus = spans_corpus_from_documents_ids(spark, mega_ids).where(
         F.size("spans") >= mega_span_threshold
     )
-    return fused.unionByName(_extract_mega_flat(mega_corpus, merge_strategy))
+    return fused.unionByName(
+        _extract_mega(mega_corpus, merge_strategy, _flat_view, FLAT_SCHEMA)
+    )
 
 
 def spans_corpus_from_documents_ids(spark: SparkSession, ids: DataFrame) -> DataFrame:

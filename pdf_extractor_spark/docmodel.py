@@ -1,7 +1,7 @@
 """Per-document extraction state machine (pure Python, Arrow-batch friendly).
 
 This module is the single source of truth for the engine's extraction
-semantics. It is executed on executors inside Arrow-vectorized pandas
+semantics. It is executed on executors inside Arrow-batched map
 UDFs (see ``operators/extract.py``) and doubles as the golden-fixture
 oracle in the test suite — the same function, so pipeline and oracle
 cannot drift.

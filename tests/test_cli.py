@@ -34,6 +34,69 @@ def test_cli_convert_md_dir(spark, tmp_path, capsys):
     assert all("out_spans" in d for d in lines)
 
 
+def test_cli_convert_sinks_hold_the_extraction(spark, tmp_path, capsys):
+    """Both sinks of one convert run carry the full extraction: each
+    JSON line equals ``docmodel.extract_document`` of its file (a file
+    of blank lines gives ``"out_spans":[]``; a doc above the threshold
+    goes through the skew path), and the parquet equals ``extract_elements``
+    on the same docs."""
+    from pdf_extractor_spark.__main__ import main
+    from pdf_extractor_spark.docmodel import extract_document
+    from pdf_extractor_spark.operators.extract import extract_elements
+    from pdf_extractor_spark.schema import ELEMENT_COLUMNS
+    from pdf_extractor_spark.sources import lines_to_spans, read_text_docs
+
+    src = tmp_path / "docs"
+    src.mkdir()
+    # blank lines only: extracts to nothing (a zero-byte file never
+    # reaches extraction — Spark's file scan skips zero-length files)
+    (src / "empty.md").write_text("\n\n")
+    (src / "table.md").write_text(
+        "# Prices\n\n| item | cost |\n|---|---|\n| tea | 2 |\n| jam | 3 |\n"
+    )
+    (src / "code.md").write_text(
+        "## Code\n\n```python\ndef f(a, b=1):\n    return a\n```\ntail\n"
+    )
+    (src / "mega.md").write_text("\n".join(
+        f"# H{i}\n\npara {i}\n| a | b |\n|---|---|\n| {i} | x |" for i in range(8)
+    ))
+    expect = {
+        f.name: extract_document(lines_to_spans(f.read_text()))
+        for f in src.iterdir()
+    }
+    assert len(lines_to_spans((src / "mega.md").read_text())) >= 20
+    out, jdir = str(tmp_path / "elements"), str(tmp_path / "json")
+    rc = main([
+        "convert", "--input", str(src), "--output", out, "--json-dir", jdir,
+        "--mega-span-threshold", "20",
+    ])
+    assert rc == 0
+
+    raw = []
+    for f in sorted(os.listdir(jdir)):
+        if f.startswith("part-"):
+            with open(os.path.join(jdir, f)) as fh:
+                raw += [ln for ln in fh if ln.strip()]
+    got = {json.loads(ln)["doc_id"]: ln for ln in raw}
+    assert len(raw) == len(got) == len(expect)
+    assert '"out_spans":[]' in got["empty.md"]
+    for doc_id, line in got.items():
+        # to_json drops null fields
+        want = [{k: v for k, v in e.items() if v is not None} for e in expect[doc_id]]
+        assert json.loads(line)["out_spans"] == want, doc_id
+
+    cols = ["doc_id", *ELEMENT_COLUMNS]
+    ref = extract_elements(read_text_docs(spark, str(src)), mega_span_threshold=20)
+
+    def rows(df):
+        return sorted(
+            (r.asDict(recursive=True) for r in df.select(cols).collect()),
+            key=lambda d: (d["doc_id"], d["offset"]),
+        )
+
+    assert rows(spark.read.parquet(out)) == rows(ref)
+
+
 def test_cli_search_bm25(spark, capsys):
     from pdf_extractor_spark.__main__ import main
 

@@ -176,3 +176,21 @@ def test_lessons_delete_confirm_semantics(spark, tmp_path, capsys):
     # deleting a missing key is the reference's error path
     rc = main(["lessons", "delete", "lesson_d", "--store", store, "--yes"])
     assert rc == 1
+
+
+def test_lessons_no_pretty_prints_compact_json(spark, tmp_path, capsys):
+    """--pretty is on by default; --no-pretty turns it off."""
+    from pdf_extractor_spark.__main__ import main
+
+    store = str(tmp_path / "lessons")
+    assert _add(main, store, "lesson_np", "compact output") == 0
+    capsys.readouterr()
+
+    assert main(["lessons", "get", "lesson_np", "--store", store]) == 0
+    pretty = capsys.readouterr().out
+    assert main(["lessons", "get", "lesson_np", "--store", store,
+                 "--no-pretty"]) == 0
+    compact = capsys.readouterr().out
+    assert pretty.count("\n") > 2
+    assert compact.count("\n") == 1
+    assert json.loads(compact) == json.loads(pretty)

@@ -6,11 +6,12 @@ from pyspark.sql import functions as F
 from pdf_extractor_spark.corpus import corpus_rows
 from pdf_extractor_spark.docmodel import extract_document
 from pdf_extractor_spark.operators.extract import (
+    _flat_arrow_batches,
     extract_elements,
     extract_spans,
     extracted_flat,
 )
-from pdf_extractor_spark.schema import DOCS_SCHEMA
+from pdf_extractor_spark.schema import DOCS_SCHEMA, FLAT_SCHEMA
 
 
 def tuples(elements):
@@ -53,25 +54,63 @@ def test_flat_view_order_and_metadata(spark, small_corpus):
 
 
 def test_plan_is_arrow_only(spark, small_corpus):
-    """Zero per-row Python: the plan must use Arrow-vectorized eval
-    (ArrowEvalPython / FlatMapGroupsInPandas), never BatchEvalPython."""
+    """Zero per-row Python: the plan must use Arrow-batched operators
+    (MapInArrow / FlatMapGroupsInArrow), never BatchEvalPython."""
     _, df = small_corpus
     plan = extract_spans(df)._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" in plan or "EvalPython" not in plan
 
 
-def test_scalar_path_has_no_shuffle(spark, small_corpus):
-    """The non-skew path must be map-only: no Exchange in the plan."""
-    _, df = small_corpus
-    small_only = df.filter(F.size("spans") < 10_000_000)
-    from pdf_extractor_spark.operators.extract import make_extract_udf
+def _union_branches(df):
+    """The plan strings of the (small, mega) branches of the executed
+    plan's Union, in ``unionByName`` order."""
+    node = df._jdf.queryExecution().executedPlan()
+    if node.nodeName() == "AdaptiveSparkPlan":
+        node = node.executedPlan()
+    stack = [node]
+    while stack:
+        node = stack.pop()
+        kids = [node.children().apply(i) for i in range(node.children().size())]
+        if node.nodeName() == "Union":
+            return [k.toString() for k in kids]
+        stack.extend(kids)
+    raise AssertionError("plan has no Union")
 
-    out = small_only.select(
-        "doc_id", make_extract_udf()(F.col("spans")).alias("out_spans")
-    )
+
+PY_NODES = ("MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython",
+            "FlatMapGroupsInArrow", "FlatMapGroupsInPandas")
+
+
+def _py_nodes(plan: str) -> list:
+    return [
+        line.split()[0] for line in
+        (ln.lstrip(" :+-*(0123456789)") for ln in plan.splitlines())
+        if line.startswith(PY_NODES)
+    ]
+
+
+def test_scalar_path_has_no_shuffle(spark, small_corpus):
+    """extract_spans' small-doc branch is map-only: no Exchange, and
+    the kernel runs as one MapInArrow."""
+    _, df = small_corpus
+    small, mega = _union_branches(extract_spans(df, mega_span_threshold=120))
+    assert "Exchange" not in small
+    assert _py_nodes(small) == ["MapInArrow"]
+    assert "Exchange" in mega and _py_nodes(mega) == ["FlatMapGroupsInArrow"]
+
+
+def test_convert_plan_evaluates_the_kernel_once(spark, small_corpus):
+    """The convert CLI's plan, extracted_flat(extract_spans(...)), runs
+    the kernel once per small doc: posexplode's inferred
+    ``size(out_spans) > 0`` filter cannot be pushed below a map
+    operator, so no second (ArrowEvalPython) evaluation appears."""
+    _, df = small_corpus
+    out = extracted_flat(extract_spans(df, mega_span_threshold=120))
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    small, _ = _union_branches(out)
+    assert _py_nodes(small) == ["MapInArrow"]
 
 
 def test_flat_path_matches_oracle(spark, small_corpus):
@@ -109,16 +148,13 @@ def test_flat_plan_is_map_only_and_arrow(spark, small_corpus):
     assert "BatchEvalPython" not in plan
     # the union includes the (empty) mega branch whose groupBy shuffles;
     # the small branch itself must stay exchange-free: check its side
-    small_branch = small_only.select("doc_id", "spans").mapInPandas(
-        __import__(
-            "pdf_extractor_spark.operators.extract", fromlist=["_flat_batches"]
-        )._flat_batches("default"),
-        schema=__import__(
-            "pdf_extractor_spark.schema", fromlist=["FLAT_SCHEMA"]
-        ).FLAT_SCHEMA,
+    small_branch = small_only.select("doc_id", "spans").mapInArrow(
+        _flat_arrow_batches("default"), schema=FLAT_SCHEMA
     )
     plan2 = small_branch._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan2
+    small, _ = _union_branches(out)
+    assert "Exchange" not in small and _py_nodes(small) == ["MapInArrow"]
 
 
 def test_deterministic_across_runs(spark, small_corpus):
@@ -126,3 +162,38 @@ def test_deterministic_across_runs(spark, small_corpus):
     a = extract_spans(df).orderBy("doc_id").collect()
     b = extract_spans(df).orderBy("doc_id").collect()
     assert a == b
+
+
+def test_skew_path_keeps_array_order_for_tied_and_null_offsets(spark):
+    """A mega-doc whose offsets repeat and are partly null: the skew
+    path sorts each group by array position before the kernel, so
+    ties and nulls (read as 0) keep array order exactly as
+    ``docmodel.extract_document`` does, in both views."""
+    pattern = [
+        ("heading", "# Alpha", 2), ("text", "one", None), ("text", "two", 1),
+        ("text", "", 1), ("table_row", "| a | b |", None),
+        ("table_row", "|---|---|", None), ("table_row", "| 1 | 2 |", None),
+        ("heading", "## Beta", 2), ("text", "three", 0), ("code", "x = 1", 1),
+        ("image", "![fig](f.png)", None), ("text", "four", 2),
+    ]
+    spans = [
+        {"kind": k, "text": f"{t} {rep}" if k in ("text", "heading") and t else t,
+         "media_ref": None, "offset": o}
+        for rep in range(6) for k, t, o in pattern
+    ]
+    small = [{"kind": "text", "text": "small", "media_ref": None, "offset": None}]
+    rows = [{"doc_id": "mega", "spans": spans}, {"doc_id": "small", "spans": small}]
+    df = spark.createDataFrame(rows, schema=DOCS_SCHEMA)
+    expect = {r["doc_id"]: extract_document(r["spans"]) for r in rows}
+    assert len({e["kind"] for e in expect["mega"]}) == 5
+
+    nested = {
+        r["doc_id"]: [e.asDict(recursive=True) for e in r["out_spans"]]
+        for r in extract_spans(df, mega_span_threshold=10).collect()
+    }
+    assert nested == expect
+    flat: dict = {}
+    for r in extract_elements(df, mega_span_threshold=10).collect():
+        d = r.asDict(recursive=True)
+        flat.setdefault(d.pop("doc_id"), []).append(d)
+    assert {k: sorted(v, key=lambda e: e["offset"]) for k, v in flat.items()} == expect
